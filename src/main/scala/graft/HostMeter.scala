@@ -67,7 +67,7 @@ object HostMeter {
     } catch { case scala.util.control.NonFatal(_) => false }
 
   /** The untimed pre-sample collection every measurement harness shares
-    * (Bench, BenchSome, ScaleProbe, the probes via [[timed]]): pay the
+    * (Bench, ScaleProbe, and BenchSome/RefBench via [[timed]]): pay the
     * accumulated GC debt OUTSIDE the timer — the round-14 fix for the
     * phase-locked periodic-GC artifact — with heap shrink pinned off so
     * the collection cannot charge page re-commit to the next timed
@@ -91,25 +91,5 @@ object HostMeter {
     f
     val t = (System.nanoTime() - s0) / 1e9
     (t, describe(b, sample()))
-  }
-
-  /** Shared interleaved-A/B pass loop (round-16 review: the pass ×
-    * variant round-robin + [[timed]] + per-variant-min bookkeeping +
-    * `[tag] pass=… / min …` print block existed as near-identical copies
-    * across the A/B harnesses): runs every variant once per pass — the
-    * one-window discipline that makes cross-variant wall differences
-    * meaningful — and returns the per-variant minima. Harnesses with
-    * genuinely different loop shapes (GcAB's per-mode pre-step + avg
-    * tracking, CodecAB's query×codec grid print) keep their own loops. */
-  def abLoop(tag: String, passes: Int,
-      variants: Seq[(String, () => Unit)]): Map[String, Double] = {
-    val best = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-    for (pass <- 1 to passes; (name, run) <- variants) {
-      val (t, host) = timed(run())
-      println(f"[$tag] pass=$pass $name%-14s $t%7.2fs  $host")
-      best(name) = math.min(best.getOrElse(name, Double.MaxValue), t)
-    }
-    best.foreach { case (k, t) => println(f"[$tag] min $k%-14s $t%7.2fs") }
-    best.toMap
   }
 }

@@ -31,17 +31,17 @@ object Pipeline {
     df.write.mode(SaveMode.Ignore).parquet(path)
 
   /** Full pipeline with per-stage wall-clock timings (O16). Returns
-    * (tokenized row count, stage timings in seconds). Boundary `mode`:
-    * "select" (exact, default), "gk" (Greenwald-Khanna sketch), "sample"
-    * (single-pass DKW-bounded sampling — the fast approximate path). */
-  /** `sink = true` persists tokens to parquet (the full-pipeline shape);
+    * (tokenized row count, stage timings in seconds). Boundaries are
+    * exact ([[Tokenize.quantileBoundsSelect]]).
+    *
+    * `sink = true` persists tokens to parquet (the full-pipeline shape);
     * `sink = false` materializes every token through the noop sink without
     * writing — the REFERENCE-PARITY shape: etl_benchmark.py:66-81 computes
     * `tokenized_data` in memory and never persists it, so charging our run
     * a 10M x 20 parquet write the reference doesn't pay overstates the
     * gap (write-side variance on this host is also the noisiest stage). */
   def run(spark: SparkSession, workDir: String, rows: Long = 1000000, cols: Int = 8,
-          bins: Int = Tokenize.DefaultBins, mode: String = "select",
+          bins: Int = Tokenize.DefaultBins,
           sink: Boolean = true): (Long, Map[String, Double]) = {
     val timings = scala.collection.mutable.LinkedHashMap.empty[String, Double]
     def stage[T](name: String)(f: => T): T = {
@@ -76,14 +76,7 @@ object Pipeline {
     }
     val tokenCols = df.columns.toSeq
     val bounds = stage("boundaries") {
-      mode match {
-        case "gk" => Tokenize.quantileBoundsApprox(df, tokenCols, Tokenize.innerProbs(bins))
-        case "sample" => Tokenize.quantileBoundsSample(df, tokenCols, Tokenize.innerProbs(bins))
-        case "sample25" => // i.i.d.-layout fast path: scan 1/4 of partitions
-          Tokenize.quantileBoundsSample(df, tokenCols, Tokenize.innerProbs(bins),
-            partitionFraction = 0.25)
-        case _ => Tokenize.quantileBoundsSelect(df, tokenCols, Tokenize.innerProbs(bins))
-      }
+      Tokenize.quantileBoundsSelect(df, tokenCols, Tokenize.innerProbs(bins))
     }
     val n = stage(if (sink) "tokenize+sink" else "tokenize") {
       val tokens = tokenCols.map(c => Tokenize.discretize(col(c), bounds(c), bins).as(s"${c}_token"))

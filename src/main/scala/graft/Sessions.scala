@@ -3,15 +3,13 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** THE session standard for every graft runner main (round 13): the
-  * standard used to live as ~16 hand-copied builder blocks, and adding a
+  * standard used to live as hand-copied builder blocks, and adding a
   * session-wide setting meant a hand sweep that missed files — the zstd
-  * adoption landed in 10 mains but not BenchSome/TimeQueries/RankBench/
-  * QselProbe, leaving the dev edit-loop timers on lz4 while Bench ran
-  * zstd: up to ~24% apart on volume-bound sort exchanges (FuzzyProbe's
-  * own codec A/B), i.e. exactly the cross-window confound the round-13
-  * codec work existed to eliminate. One builder makes the next
-  * session-wide standard a one-line change that cannot silently miss a
-  * harness.
+  * adoption once reached only some of the timers, leaving them on lz4
+  * while Bench ran zstd: up to ~24% apart on volume-bound sort exchanges,
+  * i.e. exactly the cross-window confound the round-13 codec work existed
+  * to eliminate. One builder makes the next session-wide standard a
+  * one-line change that cannot silently miss a harness.
   *
   * The standard itself, and why each line is on it:
   *  - `shuffle.partitions = cpus` — local[N] has no executor fan-out;
@@ -25,14 +23,14 @@ import org.apache.spark.sql.SparkSession
   *    metadata at worst — cheap next to re-running the compiler.
   *  - `io.compression.codec = zstd` — round-13 one-window A/B: the
   *    volume-bound ~20 GB fuzzy sort exchange ran 34.6/36.9 s (zstd)
-  *    vs 41.9/61.2 s (lz4); CodecAB measured the small-shuffle sf0.1
-  *    regime neutral within the host band, so the tighter codec is
-  *    free where it doesn't win.
+  *    vs 41.9/61.2 s (lz4); the small-shuffle sf0.1 regime measured
+  *    neutral within the host band, so the tighter codec is free where
+  *    it doesn't win.
   *  - `rdd.compress = true` — serialized-at-rest RDD blocks (the
-  *    memory-tight-regime edge checkpoint in Graph, the serialized melt
-  *    frame in Tokenize — the ONLY serialized persists in the engine;
-  *    deserialized MEMORY_AND_DISK blocks are untouched by this flag)
-  *    compress through the session codec (zstd). Round 18: the 1000×
+  *    memory-tight-regime edge checkpoint in Graph, the per-column sort
+  *    cache in Tokenize.quantileBoundsExact — the ONLY serialized
+  *    persists in the engine; deserialized MEMORY_AND_DISK blocks are
+  *    untouched by this flag) compress through the session codec (zstd). Round 18: the 1000×
   *    pagerank checkpoint is ~29 GB raw serialized (1.2 B two-long edge
   *    rows) — mostly EVICTED to disk past the 19 GiB pool — vs ~4×
   *    smaller compressed; at that scale the per-read decompress is paid
@@ -50,12 +48,16 @@ import org.apache.spark.sql.SparkSession
   *    event timestamps read as long micros-convertible values.
   *  - `cleaner.periodicGC.interval = 60s` — with a large heap the
   *    driver may never GC, so ContextCleaner never reaps broadcast/
-  *    shuffle blocks and accumulated state inflates later queries.
+  *    shuffle blocks and accumulated state inflates later queries. The
+  *    tick can phase-lock with ~60 s deterministic multi-query passes
+  *    (round 14 measured it landing in the SAME query's timed slot every
+  *    pass); the harnesses collect untimed before each sample instead
+  *    (see [[HostMeter.untimedGc]]).
   *  - UI off — headless runner.
   *
-  * `extra` appends/overrides per-harness settings (Verify's parquet
-  * timestamp type, the codec-A/B harnesses' per-codec override). The
-  * driver's own contract session is built by the DRIVER, not here —
+  * `extra` appends/overrides per-harness settings (e.g. Verify's parquet
+  * timestamp type). The driver's own contract session is built by the
+  * DRIVER, not here —
   * contract queries must stay correct under a default session; this
   * standard is about comparable MEASUREMENT, not correctness. */
 object Sessions {
@@ -63,44 +65,15 @@ object Sessions {
     "spark.ui.enabled" -> "false",
     "spark.sql.codegen.cache.maxEntries" -> "5000",
     "spark.io.compression.codec" -> "zstd",
-    // env-overridable (SPARK_GRAFT_RDD_COMPRESS) for A/Bs of the
-    // serialized-checkpoint regime
-    "spark.rdd.compress" -> env("SPARK_GRAFT_RDD_COMPRESS", "true"),
+    "spark.rdd.compress" -> "true",
     "spark.sql.session.timeZone" -> "UTC",
     "spark.sql.legacy.parquet.nanosAsLong" -> "true",
-    // env-overridable (SPARK_GRAFT_PERIODIC_GC) so probe A/Bs can move or
-    // disable the tick: round 14 caught it landing in the SAME SLOT of a
-    // deterministic multi-query probe pass (~60 s/pass), charging one
-    // query a constant ~5 s on every pass — see SURVEY's family-slot note
-    "spark.cleaner.periodicGC.interval" -> env("SPARK_GRAFT_PERIODIC_GC", "60s")) ++
-    skewGateConfs(env("SPARK_GRAFT_SKEW_GATE", ""))
-
-  /** Skew-join posture (round-16 SkewAB, measured at 100× on a
-    * 14×-median hot key): DEFAULT AQE does NOT split the straggler —
-    * its gate is partition BYTES (256 MB) while a compressed-columnar
-    * straggler is a ROW-COUNT problem (16.8 s ≈ the 16.4 s no-skew
-    * baseline, skew=false in the finalized plan); a TUNED gate
-    * (threshold 32 MB / factor 2 / 16 MB advisory) split it and won
-    * (5.2 s) over salt=8 (8.7 s) and salt=32 (7.7 s). Where conf is
-    * controllable, tune the AQE gate BEFORE reaching for salting —
-    * salting stays the in-plan technique for environments whose conf
-    * is fixed (q_skew_join, oracle-proven). Opt-in knob
-    * (SPARK_GRAFT_SKEW_GATE=tuned applies the A/B's winning trio;
-    * default empty adds nothing) so the measurement standard keeps
-    * driver-default comparability. Pure core, spec-pinned. */
-  private[graft] def skewGateConfs(mode: String): Seq[(String, String)] =
-    mode match {
-      case "tuned" => Seq(
-        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "32m",
-        "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2",
-        "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "16m")
-      case _ => Nil
-    }
+    "spark.cleaner.periodicGC.interval" -> "60s")
 
   /** Env lookup that treats an EMPTY value as unset (round-14 advisor
-    * item: `SPARK_GRAFT_PERIODIC_GC=""` passed "" straight into Spark's
-    * interval parser and failed session build; the shell idiom `VAR= cmd`
-    * should mean "default", not "crash"). */
+    * item: an empty knob passed "" straight into Spark's conf parsers and
+    * failed session build; the shell idiom `VAR= cmd` should mean
+    * "default", not "crash"). */
   private[graft] def env(name: String, default: String): String =
     envOpt(name).getOrElse(default)
 
@@ -113,7 +86,7 @@ object Sessions {
 
   /** Default thread count: min(host cores, 32) — round-13 advisor item:
     * a literal "32" default meant every runner that did NOT hand-clamp
-    * (ScanProbe, RefBench, …) got local[32] + 32 shuffle partitions on a
+    * (RefBench, …) got local[32] + 32 shuffle partitions on a
     * smaller host, oversubscribing it and skewing dev timings. The 32
     * ceiling matches the driver's contract environment (local[32],
     * 32 shuffle partitions) so big-host runs stay comparable. */

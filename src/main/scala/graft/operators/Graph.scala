@@ -369,8 +369,7 @@ object Graph {
     * src-partitioning its groupBy key IS the carried partitioning key (no
     * exchange); under dst-partitioning the build pays ONE
     * map-side-combined |V|-bounded exchange — a one-time cost the
-    * per-round savings repay [[PrRounds]]-fold. Split from [[qPagerank]]
-    * so PagerankProbe can A/B both strategies over their native layouts. */
+    * per-round savings repay [[PrRounds]]-fold. */
   private[graft] def buildCheckpoint(spark: SparkSession, dir: String, bcast: Boolean)
       : (DataFrame, DataFrame, Long, Seq[org.apache.spark.rdd.RDD[_]]) = {
     val coalesceKey = "spark.sql.adaptive.coalescePartitions.enabled"

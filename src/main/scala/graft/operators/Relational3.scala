@@ -74,10 +74,10 @@ object Relational3 {
         "4-NOT SPECIFIED" -> "unspecified", "5-LOW" -> "low"))
       .orderBy("o_orderstatus")
 
-  /** Round-16 A/B hook (verdict "what's wrong" item 4): true (shipped)
-    * sums the stats power sums on SPLIT PRIMITIVE-LONG lanes; false
-    * restores the direct Decimal(38,6) sums for comparison. Both paths
-    * are bit-identical (spec-pinned) — see [[splitDsum]]. */
+  /** Reference-form toggle (round 16): true (shipped) sums the stats
+    * power sums on SPLIT PRIMITIVE-LONG lanes; false restores the direct
+    * Decimal(38,6) sums the spec compares against. Both paths are
+    * bit-identical (spec-pinned) — see [[splitDsum]]. */
   @volatile private[graft] var StatsSumSplitLong: Boolean = true
 
   /** The addend's exact micros-long, pre-projected under `<name>_us` —
@@ -304,17 +304,6 @@ object Relational3 {
     * the original in-query rationale. */
   private val gateState = scala.collection.concurrent.TrieMap
     .empty[String, (String, (Seq[(String, (Long, Map[Long, Double]))], Seq[(String, Long)]))]
-
-  /** Probe hook (SketchProbe's `build` row only): drop the cached gate for
-    * ONE dir so the next [[sketchGateState]] call there re-runs the
-    * overlapped build — the only way to time the first-invocation build
-    * repeatedly in one JIT-warm JVM (a fresh JVM conflates it with
-    * class-load/codegen bootstrap, measured separately by ScanProbe).
-    * Dir-scoped (round-14 advisor item): a global clear() would silently
-    * re-charge the build to OTHER dirs' `full`/`gate` rows if a probe ever
-    * times multiple dirs in one JVM. Never called by contract queries. */
-  private[graft] def clearGateStateForProbe(dir: String): Unit =
-    gateState.keys.filter(_.endsWith("|" + dir)).foreach(gateState.remove)
 
   /** Round-13 advisor item (medium): entries are VALIDATED against a
     * metadata fingerprint of `dir`/lineitem.parquet (sizes + mtimes) on

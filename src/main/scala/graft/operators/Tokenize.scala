@@ -15,13 +15,12 @@ import graft.functions.BucketizeExpr
   * Spark-first formulations, with different scale profiles:
   *
   *  1. '''Rank-based''' — `pd.qcut(labels=False)` semantics (token =
-  *     NTILE(bins) - 1 over a total order (value, tiebreak…)), three
+  *     NTILE(bins) - 1 over a total order (value, tiebreak…)), two
   *     spec-equal implementations: `tokenizeRank` (window form — compact,
   *     bit-stable oracle reference, but one single-partition sort per
-  *     column), `tokenizeRankDistributed` (melt + one range sort —
-  *     null-tolerant general form), and '''`tokenizeRankSelect`''' (the
-  *     contract scale path: bucket-boundary rows located by selection,
-  *     tokens map-only — 7.3 s vs 52.8 s window at 10 M×4, RankBench).
+  *     column) and '''`tokenizeRankSelect`''' (the contract
+  *     scale path: bucket-boundary rows located by selection, tokens
+  *     map-only — 7.3 s vs 52.8 s window at 10 M×4, RankBench).
   *
   *  2. '''Boundary-based, two-phase''' (`tokenizeByBounds`) — the 100 TB
   *     path, mirroring the reference's precompute-boundaries-once design
@@ -76,94 +75,6 @@ object Tokenize {
     df.select(outKeys ++ tokens: _*).orderBy(outOrder: _*)
   }
 
-  /** Distributed exact rank tokenizer — same tokens as [[tokenizeRank]]
-    * (proved by equality spec) with NO single-partition window anywhere:
-    *
-    *  1. '''melt''': one codegen'd Expand pass turns each row into |cols|
-    *     records (col_idx, value, full tiebreak) — a single dataset instead
-    *     of |cols| separate column jobs;
-    *  2. '''one range-partitioned sort''' by (col_idx, value, tiebreak…) —
-    *     Spark samples split points and spreads the |cols|·n records over
-    *     every core (col blocks are contiguous in the global order);
-    *  3. global positions from zipWithIndex over the persisted sorted RDD;
-    *     each record's in-column position is pos − col_idx·n, and its token
-    *     is the NTILE bucket formula of that position;
-    *  4. '''group-pivot''' back to one row per tiebreak tuple (max-when per
-    *     col_idx) — a hash aggregation, NOT a row-id join.
-    *
-    * vs the window form: the only global structure is one parallel sort of
-    * the melted records; nothing ever funnels through a single partition.
-    * This is the contract `q_tokenize_rank` plan; the window form is kept
-    * as the compact oracle-fidelity reference.
-    *
-    * Requirement: `tiebreak` must be a KEY (unique tuple) — it already had
-    * to be a total order for the tokens to be deterministic, and the pivot
-    * additionally relies on it to identify rows. (In the driver corpus
-    * (l_orderkey, l_linenumber) alone is ~23% duplicated, but keys ++ all
-    * four measures is unique.) Nulls sort first within a column block,
-    * matching the window form's NULLS FIRST ntile order. */
-  def tokenizeRankDistributed(df: DataFrame, cols: Seq[String], tiebreak: Seq[String],
-                              bins: Int = DefaultBins): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
-    val k = cols.size
-    val ci = cols.zipWithIndex.tail.foldLeft(when(col("__c") === cols.head, 0)) {
-      case (acc, (c, i)) => acc.when(col("__c") === c, i)
-    }
-    val melted = df
-      .unpivot(tiebreak.map(col).toArray, cols.map(col).toArray, "__c", "__v")
-      .select(ci.as("__ci") +: col("__v").cast("double").as("__v") +: tiebreak.map(col): _*)
-    val sorted = melted
-      .orderBy(col("__ci") +: col("__v") +: tiebreak.map(col): _*)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      // one pass over the cached sort: per-partition row counts -> global
-      // offsets (range-sort partitions are ordered by pid). k·n tiny rows
-      // of shuffle; n falls out for free (no separate count job).
-      val pidCounts = sorted.groupBy(spark_partition_id().as("__pid")).count()
-        .collect().map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
-      // the global-position reconstruction below reads the partition-local
-      // record counter from monotonically_increasing_id's low 33 bits — an
-      // undocumented layout; assert the only way it can go wrong (a cached
-      // partition with >= 2^33 rows would carry into the partition-id bits)
-      require(pidCounts.forall(_._2 < (1L << 33)),
-        s"tokenizeRankDistributed: a cached partition holds >= 2^33 rows (max ${pidCounts.map(_._2).max}) — repartition the input before tokenizing")
-      val n = pidCounts.map(_._2).sum / k
-      // NTILE semantics: first (n % bins) buckets have size n/bins + 1
-      val base = n / bins
-      val extra = n % bins
-      val cutoff = extra * (base + 1)
-      val offsets: Map[Int, Long] = {
-        var acc = 0L
-        pidCounts.map { case (p, c) => val o = p -> acc; acc += c; o }.toMap
-      }
-      // exact integer division on long-valued doubles: (a - a%b)/b has an
-      // exactly-divisible numerator, so the double division is exact
-      def idiv(a: Column, b: Long): Column = ((a - a % b) / b).cast("long")
-      // global sort position from the cached partition layout: offset of
-      // this partition + the partition-local record number that
-      // monotonically_increasing_id carries in its low 33 bits — all
-      // codegen'd, no zipWithIndex jobs, no Row conversion.
-      val pos = element_at(typedlit(offsets), spark_partition_id()) +
-        monotonically_increasing_id().bitwiseAND(lit((1L << 33) - 1)) -
-        col("__ci").cast("long") * n
-      val tok = when(pos < cutoff, idiv(pos, base + 1))
-        .otherwise(lit(extra) + idiv(pos - cutoff, base)).cast("int")
-      val pivots = cols.zipWithIndex.map { case (c, i) =>
-        max(when(col("__ci") === i, col("__tok"))).as(s"${c}_token")
-      }
-      val outCols = (tiebreak.filterNot(cols.contains) ++ cols.map(c => s"${c}_token")).map(col)
-      // eager localCheckpoint: materializes the (small) pivoted result so
-      // the sort cache can be released deterministically before returning;
-      // the checkpoint blocks are reclaimed by ContextCleaner on GC
-      val pivoted = sorted.withColumn("__tok", tok)
-        .groupBy(tiebreak.map(col): _*)
-        .agg(pivots.head, pivots.tail: _*)
-        .select(outCols: _*)
-        .localCheckpoint(true)
-      pivoted.orderBy(outCols: _*)
-    } finally sorted.unpersist(blocking = false)
-  }
-
   /** Rank tokenizer, selection-based — the preferred scale path and the
     * contract `q_tokenize_rank` plan. The fact table is NEVER globally
     * sorted; instead the ~(bins-1) NTILE bucket-boundary ROWS per column are
@@ -178,9 +89,9 @@ object Tokenize {
     *
     * which is exactly the row's NTILE bucket because composite keys are
     * unique. Cost: 2 scans + a candidate-sized shuffle + the output sort,
-    * vs one full range sort of |cols|·n melted records for
-    * [[tokenizeRankDistributed]] — this is the shape that wins on a
-    * 1000-executor cluster (boundary keys broadcast as plan constants).
+    * vs one full range sort of |cols|·n melted records for a melt-based
+    * form — this is the shape that wins on a 1000-executor cluster
+    * (boundary keys broadcast as plan constants).
     *
     * Requirements: `tiebreak` must be a unique total order — it is also
     * the output ordering, applied below the token projection; all key
@@ -204,10 +115,8 @@ object Tokenize {
     // unconverted scan for the aggregation passes: primitive getDouble on
     // unsafe rows — no Row boxing (measured ~2x on the two passes)
     val internal = proj.queryExecution.toRdd
-    val tRank0 = System.nanoTime()
     val n = df.count() // parquet metadata count — no column scan
     require(n > 0, "tokenizeRankSelect: empty input")
-    val tCount = devPhase("rank", "count", tRank0)
     // 0-based global position of the first row of NTILE buckets 1..bins-1
     val base = n / bins
     val extra = n % bins
@@ -226,7 +135,6 @@ object Tokenize {
     // buckets because the tiebreak participates in the comparison)
     val frac = math.min(1.0, sampleSize.toDouble / n)
     val sampleRows = proj.sample(withReplacement = false, frac, seed = 42).collect()
-    val tSample = devPhase("rank", "sample", tCount)
     // the sample is the FIRST thing to touch the data, so it is also the
     // first place a null/NaN precondition violation can surface — fail here
     // with the column name, not an opaque NPE inside keyOf (the full-data
@@ -308,7 +216,6 @@ object Tokenize {
     }.treeReduce { (a, b) =>
       var i = 0; while (i < a.length) { a(i) += b(i); i += 1 }; a
     }
-    val tHist = devPhase("rank", "hist", tSample)
     require(histAll(histAll.length - 2) == 0,
       s"tokenizeRankSelect: ${histAll(histAll.length - 2)} rows have null sort columns")
     require(histAll.last == 0,
@@ -407,7 +314,6 @@ object Tokenize {
     slotOfB.destroy()
     gidxB.destroy()
     keyIdxB.destroy()
-    devPhase("rank", "gather", tHist)
     // thresholds per column, ascending by position = ascending by key
     val thresholds: Array[Seq[Array[Double]]] = Array.tabulate(k) { ci =>
       val cum = cums(ci)
@@ -440,14 +346,8 @@ object Tokenize {
     // + tokens), so any tie order hashes the same. The oracle ORDER BY
     // carries the same keys + token aliases.
     val outKeys = tiebreak.filterNot(cols.contains)
-    // probe-only A/B hook (RankProbe): -Dgraft.rank.rawsort=true rebuilds
-    // the round-8..12 shape (raw-tiebreak sort below the token projection)
-    // so the two sort shapes can be timed in ONE window at 100×
-    if (java.lang.Boolean.getBoolean("graft.rank.rawsort"))
-      df.orderBy(tiebreak.map(col): _*).select(outKeys.map(col) ++ tokens: _*)
-    else
-      orderByKeysThenPackedTokens(df.select(outKeys.map(col) ++ tokens: _*),
-        outKeys, cols.map(c => s"${c}_token"))
+    orderByKeysThenPackedTokens(df.select(outKeys.map(col) ++ tokens: _*),
+      outKeys, cols.map(c => s"${c}_token"))
   }
 
   /** Inner quantile probabilities 1/bins … (bins-1)/bins. */
@@ -651,16 +551,6 @@ object Tokenize {
       graft.functions.BucketizeGrid.search(g, v, Int.MaxValue)
   }
 
-  /** Dev-only phase timing for the selection passes — prints ONLY under
-    * -Dgraft.qsel.verbose=true (set by the QselProbe/RankProbe harnesses);
-    * contract queries emit nothing to stderr (round-10 verdict item 3). */
-  private def devPhase(label: String, tag: String, since: Long): Long = {
-    val now = System.nanoTime()
-    if (java.lang.Boolean.getBoolean("graft.qsel.verbose"))
-      System.err.println(f"[$label] $tag=${(now - since) / 1e9}%.2f")
-    now
-  }
-
   /** Driver-side footer row count for a DataFrame that is a BARE parquet
     * scan (no filters — column pruning cannot change the row count, so a
     * plain LogicalRelation is the exact condition): sums
@@ -708,10 +598,7 @@ object Tokenize {
     // huge to collect). A bare parquet scan answers from FOOTERS on the
     // driver (no job at all — round 10, same convention as
     // Tables.rowCount); anything else pays one column-less count() scan.
-    val tPhase0 = System.nanoTime()
-    def phase(tag: String, since: Long): Long = devPhase("qsel", tag, since)
-    val footer = footerCount(df)
-    val totalRows = footer.getOrElse(df.count())
+    val totalRows = footerCount(df).getOrElse(df.count())
     val proj = df.select(cols.map(c => col(c).cast("double")): _*)
     // small inputs: one collect, driver-side sorts — the bucket machinery's
     // extra jobs cost more than they save under ~1M rows
@@ -740,11 +627,9 @@ object Tokenize {
     val visit = math.min(nPart, 64)
     val stride = math.max(1, nPart / visit)
     val perPartCap = math.max(256, sampleSize / visit)
-    val tCount = phase(s"count(footer=${footer.isDefined})", tPhase0)
     val sampleRows = internal.mapPartitionsWithIndex { (pid, it) =>
       if (pid % stride == 0) it.take(perPartCap).map(_.copy()) else Iterator.empty
     }.collect()
-    val tSample = phase("sample", tCount)
     val splits: Array[Array[Double]] = cols.indices.map { ci =>
       // NaN is stripped BEFORE deriving split points: a NaN split would be
       // unordered under IEEE compares. NaN DATA still counts — search()
@@ -788,7 +673,6 @@ object Tokenize {
     }.treeReduce { (a, b) =>
       var i = 0; while (i < a.length) { a(i) += b(i); i += 1 }; a
     }
-    val tHist = phase("hist", tSample)
     // cumulative counts -> (bucket, in-bucket offset) for every needed pos
     val cums: Array[Array[Long]] = cols.indices.map { ci =>
       val cum = new Array[Long](nb(ci) + 1)
@@ -890,7 +774,6 @@ object Tokenize {
     gidxB.destroy()
     neededBkB.destroy()
     bucketSlotB.destroy()
-    phase("gather", tHist)
     cols.indices.map { ci =>
       val cum = cums(ci)
       val byGlobal: Map[Long, Double] = neededOffsets(ci).toSeq.flatMap { case (b, offs) =>
@@ -950,41 +833,29 @@ object Tokenize {
     * sort (`Arrays.parallelSort` IEEE-754 total order) — the engine-wide
     * NaN-last policy (round 12) holds here with no extra code. */
   def quantileBoundsSample(df: DataFrame, cols: Seq[String], probs: Seq[Double],
-                           sampleSize: Int = 1000000, seed: Long = 42,
-                           partitionFraction: Double = 1.0): Map[String, Seq[Double]] = {
+                           sampleSize: Int = 1000000, seed: Long = 42): Map[String, Seq[Double]] = {
     val k = cols.size
     val n = df.count()
     require(n > 0, "quantileBoundsSample: empty input")
-    require(partitionFraction > 0 && partitionFraction <= 1.0)
     val proj = df.select(cols.map(c => col(c).cast("double")): _*)
     val rdd = proj.queryExecution.toRdd
-    // systematic partition skip: an UNTOUCHED partition iterator never
-    // opens its parquet pages, so scan cost scales with the kept fraction.
-    // Only sound when values are not correlated with file position (i.i.d.
-    // layout) — the default 1.0 keeps the row-level Bernoulli unbiased.
-    val keepEvery =
-      if (partitionFraction >= 1.0) 1
-      else math.max(1, math.round(1.0 / partitionFraction).toInt)
-    val rowFrac = math.min(1.0, sampleSize.toDouble * keepEvery / n)
+    val rowFrac = math.min(1.0, sampleSize.toDouble / n)
     // pack per-partition primitive column buffers; collect returns
     // partitions-many packs of double[] per column
     val packs: Array[Array[Array[Double]]] =
       rdd.mapPartitionsWithIndex { (idx, it) =>
-        if (idx % keepEvery != 0) Iterator.empty
-        else {
-          val rnd = new java.util.Random(seed ^ (idx * 0x9E3779B97F4A7C15L))
-          val bufs = Array.fill(k)(new scala.collection.mutable.ArrayBuilder.ofDouble)
-          it.foreach { row =>
-            if (rowFrac >= 1.0 || rnd.nextDouble() < rowFrac) {
-              var ci = 0
-              while (ci < k) {
-                if (!row.isNullAt(ci)) bufs(ci) += row.getDouble(ci)
-                ci += 1
-              }
+        val rnd = new java.util.Random(seed ^ (idx * 0x9E3779B97F4A7C15L))
+        val bufs = Array.fill(k)(new scala.collection.mutable.ArrayBuilder.ofDouble)
+        it.foreach { row =>
+          if (rowFrac >= 1.0 || rnd.nextDouble() < rowFrac) {
+            var ci = 0
+            while (ci < k) {
+              if (!row.isNullAt(ci)) bufs(ci) += row.getDouble(ci)
+              ci += 1
             }
           }
-          Iterator.single(bufs.map(_.result()))
         }
+        Iterator.single(bufs.map(_.result()))
       }.collect()
     cols.indices.map { ci =>
       val total = packs.iterator.map(_(ci).length).sum

@@ -679,8 +679,8 @@ object StreamOps {
     val sent = sentinels(stagedSchema)
     val in = if (sent.isEmpty) stagedDir
              else sentineledReplay(spark, tmp, stagedDir, stagedSchema, sent)
-    val parts = stateParts(statePartsFor(
-      perBatchRows(stagedRows, stagedFiles), spark.sparkContext.defaultParallelism))
+    val parts = statePartsFor(
+      perBatchRows(stagedRows, stagedFiles), spark.sparkContext.defaultParallelism)
     val ss = streamingSession(spark, parts)
     if (provider.nonEmpty)
       ss.conf.set("spark.sql.streaming.stateStore.providerClass", provider)
@@ -741,7 +741,7 @@ object StreamOps {
     // per-pass telemetry, load 10–13): long won EVERY pair — 121→75,
     // 68→35, 52→39, 40→32 s (min 39.9 vs 32.2) — the BigDecimal merge
     // path, not just the 8 B of row, was the cost. Long is the shipped
-    // shape; SessionSumStateLong=false keeps decimal for A/B.
+    // shape; SessionSumStateLong=false keeps the decimal reference form.
     val dec6 = org.apache.spark.sql.types.DecimalType(38, 6)
     val (sumAgg, sumOut) =
       if (SessionSumStateLong)
@@ -803,17 +803,6 @@ object StreamOps {
     Runtime.getRuntime.addShutdownHook(new Thread(() =>
       scratchRoots.values.foreach(deleteRecursively)))
 
-  /** State-store partition count OVERRIDE for the live contract queries'
-    * bounded replays: 0 (the default) = derive per query
-    * ([[statePartsFor]], or [[DefaultStateParts]] for the fixed-size
-    * drains); > 0 = explicit, and REPLACES the derived value (round-9
-    * advisor item: the old `max(override, derived)` floor meant the
-    * SessAB A/B hook could only RAISE the count — a run requesting 8 or
-    * 16 at the 100× probe silently measured the derived 32, making the
-    * A/B table misleading in exactly the direction it was built to
-    * test). */
-  @volatile private[graft] var StreamStatePartitions = 0
-
   /** Baseline state-partition count: each state partition is a store
     * instance paying per-BATCH delta-file + commit I/O, so at a fixed
     * small batch count the harness overhead is ∝ partitions, not data.
@@ -824,11 +813,6 @@ object StreamOps {
     * first commit); these queries wipe their checkpoint per invocation,
     * so the choice binds per run. */
   private[graft] val DefaultStateParts = 8
-
-  /** Effective state-partition count: explicit override wins, else the
-    * query's derived value. */
-  private def stateParts(derived: Int): Int =
-    if (StreamStatePartitions > 0) StreamStatePartitions else derived
 
   /** Pure derivation (spec-pinned in StreamingSpec): one state partition
     * per ~250k rows of a MICRO-BATCH — state-store merge/evict work is
@@ -1052,26 +1036,23 @@ object StreamOps {
       })
     }
 
-  /** Child session for the streaming jobs: same SparkContext, own SQLConf,
-    * so the state-partition choice never leaks into the caller's session.
-    * The returned contract frame is rebuilt on the CALLER's session from
-    * the scratch files, which keeps the cross-session boundary at a
-    * parquet handoff. */
-  /** Dev A/B hook (SessAB): swap the state-store provider class; empty =
-    * Spark default (HDFS-backed). */
-  @volatile private[graft] var StateProviderClass: String = ""
-
   /** Round-13 (SessAB A/B, verdict item 6 — ADOPTED): when true (the
     * default), qSessionWindowLive's sum rides the state store as an
     * 8-byte long of exact micros instead of a 16-byte slow-path
     * Decimal(38,6) buffer — bit-identical output (see the in-query
     * comment), and the long shape won every interleaved 100× pass-pair
-    * (min 32.2 vs 39.9 s). False restores the decimal shape for A/B. */
+    * (min 32.2 vs 39.9 s). False restores the decimal reference form the
+    * spec compares against. */
   @volatile private[graft] var SessionSumStateLong: Boolean = true
 
   private def streamingSession(spark: SparkSession): SparkSession =
-    streamingSession(spark, stateParts(DefaultStateParts))
+    streamingSession(spark, DefaultStateParts)
 
+  /** Child session for the streaming jobs: same SparkContext, own SQLConf,
+    * so the state-partition choice never leaks into the caller's session.
+    * The returned contract frame is rebuilt on the CALLER's session from
+    * the scratch files, which keeps the cross-session boundary at a
+    * parquet handoff. */
   private def streamingSession(spark: SparkSession,
                                parts: Int): SparkSession = {
     val ss = spark.newSession()
@@ -1093,8 +1074,6 @@ object StreamOps {
     // real drain (MaxPaceBatches + sentinel + no-data batches ≪ 1024)
     // (round-15 advisor item).
     ss.conf.set("spark.sql.streaming.numRecentProgressUpdates", "1024")
-    if (StateProviderClass.nonEmpty)
-      ss.conf.set("spark.sql.streaming.stateStore.providerClass", StateProviderClass)
     ss
   }
 
@@ -1210,7 +1189,6 @@ object StreamOps {
       .option("checkpointLocation", s"$tmp/ckpt")
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (b: Dataset[Row], batchId: Long) =>
-        val t0 = System.nanoTime()
         val sess = b.sparkSession
         val carryDf = sess.createDataFrame(
           java.util.Arrays.asList(carry: _*), b.schema)
@@ -1220,7 +1198,6 @@ object StreamOps {
         val emit = if (carryIds.isEmpty) rolled
                    else rolled.filter(!col("event_id").isin(carryIds: _*))
         emit.write.mode(SaveMode.Append).parquet(out)
-        val t1 = System.nanoTime()
         // the carry only feeds the NEXT batch — one file per batch under
         // maxFilesPerTrigger=1, so the last file's batch skips the job
         // (at fixture scale K=1 that is the ONLY batch). Extraction is a
@@ -1255,16 +1232,13 @@ object StreamOps {
               }.take(rollRows - 1)
             }.toArray
         }
-        System.err.println(f"[roll] batch=$batchId window=${(t1 - t0) / 1e9}%.2f carry=${(System.nanoTime() - t1) / 1e9}%.2f")
       }
       .start()
     q.awaitTermination()
-    val tDrain = System.nanoTime()
     val result = spark.read.parquet(out)
       .select("event_id", "event_type", "roll_n", "roll_median", "roll_p90")
       .orderBy("event_id")
     val (frame, rdd) = org.apache.spark.sql.graft.Bridge.localCheckpointed(result)
-    System.err.println(f"[roll] finalize=${(System.nanoTime() - tDrain) / 1e9}%.2f")
     stashLiveResult(spark, "roll", dir, rdd)
     deleteRecursively(tmp)
     scratchRoots.remove(s"roll|$dir")
@@ -1284,33 +1258,11 @@ object StreamOps {
   private[graft] val lastDrainProgress = scala.collection.concurrent.TrieMap
     .empty[String, Seq[(Long, Long, Long, Long)]]
 
-  /** Per-batch (batchId, triggerExecution ms) of the LAST drain per tag —
-    * the in-stream term of the drain cost decomposition (round-17 verdict
-    * item 5): wall − Σ trigger ms = everything OUTSIDE the micro-batches
-    * (staging lookup, new-session build, source file-index, stream
-    * bring-up, provider load, terminal commit, finalize + eager
-    * materialize), which DrainProbe quantifies against the empty-corpus
-    * floor. */
-  private[graft] val lastDrainTriggerMs = scala.collection.concurrent.TrieMap
-    .empty[String, Seq[(Long, Long)]]
-
-  /** Record (and print) a join drain's per-batch progress under its tag. */
+  /** Record a drain's per-batch progress under its tag. */
   private def captureDrainProgress(tag: String,
       q: org.apache.spark.sql.streaming.StreamingQuery): Unit = {
-    lastDrainTriggerMs.put(tag, q.recentProgress.toSeq.map { p =>
-      (p.batchId, Option(p.durationMs.get("triggerExecution")).map(_.toLong).getOrElse(0L))
-    })
     lastDrainProgress.put(tag, q.recentProgress.toSeq.map { p =>
       val so = p.stateOperators.headOption
-      // the full per-batch durationMs split (addBatch / queryPlanning /
-      // walCommit / commitOffsets / getBatch / latestOffset) — the
-      // bottom of the drain fixed-cost decomposition (round 17):
-      // DrainProbe reads these lines to attribute the in-trigger term
-      val split = p.durationMs.entrySet().toArray.map(_.toString).sorted.mkString(" ")
-      System.err.println(s"[$tag] batch=${p.batchId} in=${p.numInputRows}" +
-        s" ms=${p.durationMs.get("triggerExecution")}" +
-        s" stateRows=${so.map(_.numRowsTotal).getOrElse(-1L)}" +
-        s" removed=${so.map(_.numRowsRemoved).getOrElse(-1L)} [$split]")
       (p.batchId, p.numInputRows,
         so.map(_.numRowsTotal).getOrElse(-1L), so.map(_.numRowsRemoved).getOrElse(-1L))
     })

@@ -120,14 +120,4 @@ object Bridge {
   def memoryPools(spark: org.apache.spark.sql.SparkSession): Seq[(String, Long)] =
     org.apache.spark.SparkEnv.get.blockManager.master.getMemoryStatus.toSeq
       .map { case (id, (max, _)) => (id.executorId, max) }
-
-  /** Wrap an analyzed logical plan back into a DataFrame (classic
-    * backend). Probe tooling only: lets FuzzyProbe time a contract query
-    * with its top-level Sort (the contract's ORDER BY) stripped without
-    * duplicating the query builder. */
-  def ofRows(spark: org.apache.spark.sql.SparkSession,
-             plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
-      : org.apache.spark.sql.DataFrame =
-    org.apache.spark.sql.classic.Dataset.ofRows(
-      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 }

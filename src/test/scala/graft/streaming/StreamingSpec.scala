@@ -427,6 +427,30 @@ class StreamingSpec extends SparkSpec {
     } finally StreamOps.PaceRowsPerBatch = prev
   }
 
+  test("live contract drains write nothing per batch to stderr") {
+    // contract queries emit nothing to stderr: per-batch progress is kept
+    // in lastDrainProgress (and reaches a StreamingQueryListener), never
+    // printed. Capture System.err across one paced stateful drain and the
+    // foreachBatch rolling drain, both forced to several micro-batches.
+    val prevPace = StreamOps.PaceRowsPerBatch
+    val prevErr = System.err
+    val captured = new java.io.ByteArrayOutputStream()
+    try {
+      StreamOps.PaceRowsPerBatch = 100
+      System.setErr(new java.io.PrintStream(captured, true, "UTF-8"))
+      StreamOps.qSessionWindowLive(spark, sf).count()
+      StreamOps.qRollingQuantileLive(spark, sf).count()
+    } finally {
+      System.setErr(prevErr)
+      StreamOps.PaceRowsPerBatch = prevPace
+    }
+    assert(StreamOps.lastDrainProgress("session").size >= 3,
+      "the drain must have run several micro-batches for the check to mean anything")
+    val lines = captured.toString("UTF-8").linesIterator
+      .filter(l => l.contains("] batch=") || l.contains("] finalize=")).toSeq
+    assert(lines.isEmpty, "drains printed per-batch lines to stderr")
+  }
+
   test("paced stream-stream join equals the batch interval join exactly") {
     // force ~10 micro-batches on the sf0.001 fixture: the dual-sided
     // watermark eviction must never drop a view before its last possible
